@@ -31,6 +31,14 @@ class TestSeqHeader:
         assert (m["ivf_width"], m["ivf_height"]) == (800, 600)
         assert m["n_frames"] == 3 and m["width"] == 800
 
+    def test_truncated_sequence_header_raises_av1error(self):
+        obu = seq_header_obu(0, 5, 800, 600, reduced=False)
+        payload = obu[2:]
+        for cut in range(len(payload)):
+            short = bytes([obu[0], cut]) + payload[:cut]
+            with pytest.raises(Av1Error):
+                av1_meta(short)
+
     def test_errors_are_loud(self):
         with pytest.raises(Av1Error):
             av1_meta(b"")

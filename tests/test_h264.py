@@ -348,6 +348,29 @@ class TestSliceCensus:
         assert [r["poc_lsb"] for r in rows] == [0, 2, 4, 6, 8, 10]
         assert all(r["nal_bytes"] > 64 for r in rows)
 
+    def test_cabac_fixture_alignment_one_bits(self):
+        # §7.3.4: CABAC slice data starts after cabac_alignment_one_bit
+        # padding, so every bit between the slice header and the byte
+        # boundary reads back as 1
+        from tika_spark.analysis.h264 import (BitReader,
+                                              cabac_slice_nals,
+                                              rbsp_unescape)
+        nals = cabac_slice_nals("IPBBP", seed=5)
+        pads = []
+        for k, nal in enumerate(nals[2:]):
+            r = BitReader(rbsp_unescape(nal[1:]))
+            r.ue(), r.ue(), r.ue()       # first_mb, slice_type, pps_id
+            r.u(4)                       # frame_num
+            if k == 0:
+                r.ue()                   # idr_pic_id
+            r.u(8)                       # pic_order_cnt_lsb
+            r.se()                       # delta_pic_order_cnt_bottom
+            pads.append(-r.pos % 8)
+            assert all(r.u(1) == 1 for _ in range(pads[-1]))
+            assert r.read_bytes(3) == bytes(
+                (5 * 31 + k * 7 + i) % 251 for i in range(3))
+        assert any(pads)
+
     def test_cavlc_census_and_refusal(self):
         import pytest
         from tika_spark.analysis.isobmff import (Mp4Error,

@@ -30,14 +30,6 @@ class TestFoundations:
         for v in (0.0, 1.0, -1.0, 0.5, 2.0, -3.25, 100.0):
             assert vb.float32_unpack(vb.float32_pack(v)) == v
 
-    def test_lsb_bitpack(self):
-        w = vb._LBitWriter()
-        for val, n in ((5, 3), (1, 1), (300, 10), (0xABCDE, 20)):
-            w.write(val, n)
-        r = vb._LBits(w.bytes())
-        for val, n in ((5, 3), (1, 1), (300, 10), (0xABCDE, 20)):
-            assert r.read(n) == val
-
 
 class TestHeaders:
     def test_setup_parse(self):
@@ -134,6 +126,15 @@ class TestDecode:
         vb._render_line(0, 0, 64, 120, v)
         v[64:] = 120
         assert np.allclose(curve, vb._INV_DB[np.clip(v, 0, 255)])
+
+    def test_truncated_packet_raises_vorbiserror(self):
+        pk = vb.vorbis_headers(2, 44100)
+        tone = vb.vorbis_tone_packet(2, [60, 70, 3, 5], 1)
+        for cut in (1, 2, len(tone) // 2, len(tone) - 1):
+            with pytest.raises(vb.VorbisError):
+                vb.decode_vorbis_packets(pk + [tone, tone[:cut]])
+        with pytest.raises(vb.VorbisError):
+            vb.parse_headers(pk[:2] + [pk[2][:len(pk[2]) // 2]])
 
     def test_mixed_blocksizes_guard(self):
         pk = vb.vorbis_headers(1, 8000)

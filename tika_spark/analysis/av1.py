@@ -23,47 +23,14 @@ from __future__ import annotations
 
 import struct
 
+from tika_spark.bits import BitstreamError, MsbReader, MsbWriter
+
 
 class Av1Error(ValueError):
     pass
 
 
 OBU_SEQUENCE_HEADER = 1
-
-
-class _Bits:
-    def __init__(self, data: bytes):
-        self.d = data
-        self.pos = 0                      # bit position
-
-    def read(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            byte = self.pos >> 3
-            if byte >= len(self.d):
-                raise Av1Error("sequence header truncated")
-            bit = (self.d[byte] >> (7 - (self.pos & 7))) & 1
-            v = (v << 1) | bit
-            self.pos += 1
-        return v
-
-
-class _BitW:
-    def __init__(self):
-        self.bits: list[int] = []
-
-    def write(self, v: int, n: int):
-        for i in range(n - 1, -1, -1):
-            self.bits.append((v >> i) & 1)
-
-    def bytes(self) -> bytes:
-        out = bytearray()
-        for i in range(0, len(self.bits), 8):
-            b = 0
-            for j, bit in enumerate(self.bits[i:i + 8]):
-                b |= bit << (7 - j)
-            out.append(b)
-        return bytes(out)
 
 
 def _leb128(data: bytes, pos: int) -> tuple[int, int]:
@@ -107,7 +74,13 @@ def parse_obus(data: bytes) -> list[tuple[int, bytes]]:
 
 def parse_sequence_header(payload: bytes) -> dict:
     """profile / level / tier / still / coded size (spec §5.5.1)."""
-    b = _Bits(payload)
+    try:
+        return _sequence_header(MsbReader(payload))
+    except BitstreamError as exc:
+        raise Av1Error("sequence header truncated") from exc
+
+
+def _sequence_header(b: MsbReader) -> dict:
     profile = b.read(3)
     still = b.read(1)
     reduced = b.read(1)
@@ -169,7 +142,7 @@ def av1_meta(data: bytes) -> dict:
 def seq_header_obu(profile: int, level: int, width: int,
                    height: int, reduced: bool = True,
                    still: bool = True, tier: int = 0) -> bytes:
-    w = _BitW()
+    w = MsbWriter()
     w.write(profile, 3)
     w.write(1 if still else 0, 1)
     w.write(1 if reduced else 0, 1)
@@ -187,7 +160,8 @@ def seq_header_obu(profile: int, level: int, width: int,
     w.write(15, 4)
     w.write(width - 1, 16)
     w.write(height - 1, 16)
-    payload = w.bytes()
+    w.align()
+    payload = bytes(w.out)
     return (bytes([(OBU_SEQUENCE_HEADER << 3) | 0x02])
             + bytes([len(payload)]) + payload)
 

@@ -29,6 +29,8 @@ import struct
 
 import numpy as np
 
+from tika_spark.bits import MsbReader, MsbWriter
+
 _FIXED_COEFFS = {0: [], 1: [1], 2: [2, -1], 3: [3, -3, 1],
                  4: [4, -6, 4, -1]}
 
@@ -42,45 +44,7 @@ _RATES = {0: None, 1: 88200, 2: 176400, 3: 192000, 4: 8000, 5: 16000,
 MAX_SAMPLES = 1 << 26            # bomb guard (≈64M samples/channel)
 
 
-class _Bits:
-    __slots__ = ("data", "pos", "buf", "n")
-
-    def __init__(self, data: bytes, pos: int = 0):
-        self.data = data
-        self.pos = pos
-        self.buf = 0
-        self.n = 0
-
-    def read(self, nbits: int) -> int:
-        while self.n < nbits:
-            if self.pos >= len(self.data):
-                raise ValueError("truncated FLAC bitstream")
-            self.buf = (self.buf << 8) | self.data[self.pos]
-            self.pos += 1
-            self.n += 8
-        self.n -= nbits
-        v = (self.buf >> self.n) & ((1 << nbits) - 1)
-        self.buf &= (1 << self.n) - 1
-        return v
-
-    def read_signed(self, nbits: int) -> int:
-        v = self.read(nbits)
-        return v - (1 << nbits) if v >> (nbits - 1) else v
-
-    def unary(self) -> int:
-        q = 0
-        while self.read(1) == 0:
-            q += 1
-            if q > 1 << 24:
-                raise ValueError("runaway unary code")
-        return q
-
-    def align(self):
-        self.n -= self.n % 8
-        self.buf &= (1 << self.n) - 1
-
-
-def _utf8_number(bits: _Bits) -> int:
+def _utf8_number(bits: MsbReader) -> int:
     """The frame header's UTF-8-style extended number (up to 56 bits
     — frame or sample index)."""
     b0 = bits.read(8)
@@ -102,7 +66,7 @@ def _utf8_number(bits: _Bits) -> int:
     return v
 
 
-def _rice_residual(bits: _Bits, blocksize: int, order: int
+def _rice_residual(bits: MsbReader, blocksize: int, order: int
                    ) -> np.ndarray:
     """Rice-coded residual section (methods 0/1: 4/5-bit parameters,
     escape to raw)."""
@@ -136,7 +100,7 @@ def _rice_residual(bits: _Bits, blocksize: int, order: int
     return out
 
 
-def _subframe(bits: _Bits, blocksize: int, bps: int) -> np.ndarray:
+def _subframe(bits: MsbReader, blocksize: int, bps: int) -> np.ndarray:
     if bits.read(1):
         raise ValueError("bad subframe sync bit")
     stype = bits.read(6)
@@ -227,7 +191,7 @@ def decode_flac(data: bytes, verify_md5: bool = True
     if total > MAX_SAMPLES:
         raise ValueError("stream too large")
 
-    bits = _Bits(data, pos)
+    bits = MsbReader(data, pos)
     chunks: list[np.ndarray] = []
     got = 0
     while (total == 0 or got < total) and bits.pos < len(data):
@@ -327,25 +291,6 @@ def _crc16(data: bytes) -> int:
     return crc
 
 
-class _BitWriter:
-    def __init__(self):
-        self.out = bytearray()
-        self.buf = 0
-        self.n = 0
-
-    def write(self, v: int, nbits: int):
-        self.buf = (self.buf << nbits) | (v & ((1 << nbits) - 1))
-        self.n += nbits
-        while self.n >= 8:
-            self.n -= 8
-            self.out.append((self.buf >> self.n) & 0xFF)
-        self.buf &= (1 << self.n) - 1
-
-    def align(self):
-        if self.n:
-            self.write(0, 8 - self.n)
-
-
 def flac_bytes(samples: np.ndarray, rate: int = 8000,
                mode: str = "fixed2", rice_param: int = 4) -> bytes:
     """int16 (n[, channels]) → FLAC bytes (fixture/decoder coverage).
@@ -366,7 +311,7 @@ def flac_bytes(samples: np.ndarray, rate: int = 8000,
     for fi, start in enumerate(range(0, n, bs)):
         block = a[start:start + bs]
         blocksize = len(block)
-        hdr = _BitWriter()
+        hdr = MsbWriter()
         hdr.write(0x3FFE, 14)
         hdr.write(0, 1)
         hdr.write(0, 1)                  # fixed blocksize strategy
@@ -386,7 +331,7 @@ def flac_bytes(samples: np.ndarray, rate: int = 8000,
         head = bytes(hdr.out)
         head += bytes([_crc8(head)])
 
-        body = _BitWriter()
+        body = MsbWriter()
         for ch in range(channels):
             sig = block[:, ch].astype(np.int64)
             body.write(0, 1)

@@ -1515,10 +1515,12 @@ def cabac_slice_nals(pattern: str, seed: int = 0,
             w.ue(seed % 4)                   # idr_pic_id
         w.u((2 * k) % 256, 8)                # pic_order_cnt_lsb
         w.se(0)                              # delta_poc_bottom
-        # opaque stand-in for CABAC slice data (never parsed)
+        # opaque stand-in for CABAC slice data (never parsed), after
+        # the cabac_alignment_one_bit run to the byte boundary (§7.3.4)
         body = bytes((seed * 31 + k * 7 + i) % 251
                      for i in range(payload_bytes))
-        w.byte_align_zero()
+        pad = -w.nbits % 8
+        w.u((1 << pad) - 1, pad)
         nals.append(_nal(5 if idr else 1, w.getvalue() + body))
     return nals
 

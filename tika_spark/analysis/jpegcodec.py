@@ -45,6 +45,8 @@ import struct
 
 import numpy as np
 
+from tika_spark.bits import PrefixCode
+
 # ---------------------------------------------------------------- constants
 
 ZIGZAG = np.array([
@@ -144,30 +146,6 @@ def scale_quant(table: np.ndarray, quality: int) -> np.ndarray:
 
 # ------------------------------------------------------------------ decoder
 
-class _Huff:
-    """Canonical JPEG Huffman table → fast (length, code) lookup."""
-
-    def __init__(self, bits: list[int], vals: list[int]):
-        self.lookup: dict[tuple[int, int], int] = {}
-        code = 0
-        k = 0
-        for ln in range(1, 17):
-            for _ in range(bits[ln - 1]):
-                self.lookup[(ln, code)] = vals[k]
-                code += 1
-                k += 1
-            code <<= 1
-
-    def decode(self, br: "_BitReader") -> int:
-        code = 0
-        for ln in range(1, 17):
-            code = (code << 1) | br.bit()
-            v = self.lookup.get((ln, code))
-            if v is not None:
-                return v
-        raise ValueError("bad huffman code")
-
-
 class _BitReader:
     """MSB-first bit reader over entropy-coded data with 0xFF00
     un-stuffing; stops cleanly at any non-stuffed marker."""
@@ -178,8 +156,8 @@ class _BitReader:
         self.buf = 0
         self.n = 0
 
-    def bit(self) -> int:
-        if self.n == 0:
+    def read(self, n: int) -> int:
+        while self.n < n:
             if self.pos >= len(self.data):
                 raise ValueError("truncated entropy data")
             b = self.data[self.pos]
@@ -192,20 +170,17 @@ class _BitReader:
                 else:
                     # a real marker inside the scan: missing data
                     raise ValueError("marker inside entropy data")
-            self.buf = b
-            self.n = 8
-        self.n -= 1
-        return (self.buf >> self.n) & 1
-
-    def receive(self, n: int) -> int:
-        v = 0
-        for _ in range(n):
-            v = (v << 1) | self.bit()
+            self.buf = (self.buf << 8) | b
+            self.n += 8
+        self.n -= n
+        v = self.buf >> self.n
+        self.buf &= (1 << self.n) - 1
         return v
 
     def align_to_marker(self) -> int:
         """Byte-align and consume one RSTn marker; returns n (0-7)."""
         self.n = 0
+        self.buf = 0
         d = self.data
         p = self.pos
         while p + 1 < len(d) and not (d[p] == 0xFF
@@ -238,8 +213,8 @@ def decode_jpeg(data: bytes, fancy_chroma: bool = False) -> np.ndarray:
     if data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG")
     qt: dict[int, np.ndarray] = {}
-    huff_dc: dict[int, _Huff] = {}
-    huff_ac: dict[int, _Huff] = {}
+    huff_dc: dict[int, PrefixCode] = {}
+    huff_ac: dict[int, PrefixCode] = {}
     restart = 0
     frame = None
     prog = None
@@ -277,7 +252,8 @@ def decode_jpeg(data: bytes, fancy_chroma: bool = False) -> np.ndarray:
                 vals = list(seg[i + 17:i + 17 + n])
                 if len(vals) != n:
                     raise ValueError("short DHT")
-                (huff_dc if cls == 0 else huff_ac)[tid] = _Huff(bits, vals)
+                (huff_dc if cls == 0 else huff_ac)[tid] = PrefixCode(
+                    [0, *bits], vals)
                 i += 17 + n
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2
             prec, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
@@ -367,12 +343,12 @@ def _decode_scan(data, pos, frame, scan, qt, huff_dc, huff_ac,
                 for by in range(comp["v"]):
                     for bx in range(comp["h"]):
                         blk = np.zeros(64, dtype=np.int32)
-                        t = dch.decode(br)
-                        pred[ci] += _extend(br.receive(t), t)
+                        t = dch.read(br)
+                        pred[ci] += _extend(br.read(t), t)
                         blk[0] = pred[ci] * q[0]
                         k = 1
                         while k < 64:
-                            rs = ach.decode(br)
+                            rs = ach.read(br)
                             r, s = rs >> 4, rs & 15
                             if s == 0:
                                 if r == 15:
@@ -382,7 +358,7 @@ def _decode_scan(data, pos, frame, scan, qt, huff_dc, huff_ac,
                             k += r
                             if k > 63:
                                 raise ValueError("AC index overflow")
-                            blk[k] = _extend(br.receive(s), s) * q[k]
+                            blk[k] = _extend(br.read(s), s) * q[k]
                             k += 1
                         planes[ci][my * comp["v"] + by,
                                    mx * comp["h"] + bx] = blk
@@ -490,7 +466,7 @@ def _refine_nonzero(br, block, k, se, p1, m1):
     [k, se] — the EOB-run portion of an AC refinement scan."""
     while k <= se:
         if block[k]:
-            if br.bit():
+            if br.read(1):
                 if block[k] > 0 and not (block[k] & p1):
                     block[k] += p1
                 elif block[k] < 0 and not (block[k] & p1):
@@ -519,12 +495,12 @@ def _decode_prog_scan(data, pos, frame, scan, prog, huff_dc,
         dch = huff_dc.get(td)
         if dch is None:
             raise ValueError("missing table")
-        t = dch.decode(br)
-        pred[ci] += _extend(br.receive(t), t)
+        t = dch.read(br)
+        pred[ci] += _extend(br.read(t), t)
         block[0] = pred[ci] << al
 
     def decode_dc_refine(block):
-        if br.bit():
+        if br.read(1):
             block[0] |= (1 << al)
 
     def decode_ac_first(block):
@@ -536,7 +512,7 @@ def _decode_prog_scan(data, pos, frame, scan, prog, huff_dc,
             return
         k = ss
         while k <= se:
-            rs = ach.decode(br)
+            rs = ach.read(br)
             r, s = rs >> 4, rs & 15
             if s == 0:
                 if r == 15:
@@ -544,12 +520,12 @@ def _decode_prog_scan(data, pos, frame, scan, prog, huff_dc,
                     continue
                 state["eobrun"] = (1 << r) - 1
                 if r:
-                    state["eobrun"] += br.receive(r)
+                    state["eobrun"] += br.read(r)
                 return
             k += r
             if k > se:
                 raise ValueError("AC index overflow")
-            block[k] = _extend(br.receive(s), s) << al
+            block[k] = _extend(br.read(s), s) << al
             k += 1
 
     def decode_ac_refine(block):
@@ -563,24 +539,24 @@ def _decode_prog_scan(data, pos, frame, scan, prog, huff_dc,
             return
         k = ss
         while k <= se:
-            rs = ach.decode(br)
+            rs = ach.read(br)
             r, s = rs >> 4, rs & 15
             newval = 0
             if s == 0:
                 if r < 15:
                     state["eobrun"] = (1 << r) - 1
                     if r:
-                        state["eobrun"] += br.receive(r)
+                        state["eobrun"] += br.read(r)
                     _refine_nonzero(br, block, k, se, p1, m1)
                     return
                 # r == 15: pass over 16 zero-history coefficients
             else:
                 if s != 1:
                     raise ValueError("bad refinement magnitude")
-                newval = p1 if br.bit() else m1
+                newval = p1 if br.read(1) else m1
             while k <= se:
                 if block[k]:
-                    if br.bit():
+                    if br.read(1):
                         if block[k] > 0 and not (block[k] & p1):
                             block[k] += p1
                         elif block[k] < 0 and not (block[k] & p1):

@@ -61,6 +61,8 @@ become status rows; no shuffle.
 
 from __future__ import annotations
 
+from tika_spark.bits import LsbWriter
+
 ZSTD_MAGIC = b"\x28\xb5\x2f\xfd"
 _SKIPPABLE_LO = 0x184D2A50
 _SKIPPABLE_HI = 0x184D2A5F
@@ -247,35 +249,9 @@ def _fse_read_distribution(data: bytes, pos: int, max_accuracy: int,
     return counts, accuracy, new_pos
 
 
-class _FwdWriter:
-    """LSB-first forward bit writer (FSE descriptions, literal
-    section headers)."""
-
-    __slots__ = ("out", "buf", "n")
-
-    def __init__(self):
-        self.out = bytearray()
-        self.buf = 0
-        self.n = 0
-
-    def write(self, v: int, nbits: int):
-        self.buf |= (v & ((1 << nbits) - 1)) << self.n
-        self.n += nbits
-        while self.n >= 8:
-            self.out.append(self.buf & 0xFF)
-            self.buf >>= 8
-            self.n -= 8
-
-    def bytes(self) -> bytes:
-        b = bytearray(self.out)
-        if self.n:
-            b.append(self.buf & 0xFF)
-        return bytes(b)
-
-
 def _fse_write_distribution(counts: list[int], accuracy: int) -> bytes:
     """Mirror of _fse_read_distribution (fixture encoder)."""
-    w = _FwdWriter()
+    w = LsbWriter()
     w.write(accuracy - 5, 4)
     remaining = (1 << accuracy) + 1
     threshold = 1 << accuracy

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 import struct
 
+from tika_spark.bits import BitstreamError, PrefixCode
+
 
 class LzxError(ValueError):
     pass
@@ -90,42 +92,17 @@ class _Bits:
         return self.pos - self.n // 8
 
 
-class _Huff:
-    """Canonical Huffman decoder from code lengths."""
-
-    def __init__(self, lengths: list[int]):
-        self.max_len = max(lengths) if any(lengths) else 0
-        self.table: dict[tuple[int, int], int] = {}
-        code = 0
-        for ln in range(1, self.max_len + 1):
-            for sym, l in enumerate(lengths):
-                if l == ln:
-                    self.table[(ln, code)] = sym
-                    code += 1
-            code <<= 1
-        self.empty = not self.table
-
-    def decode(self, bits: _Bits) -> int:
-        code = 0
-        for ln in range(1, self.max_len + 1):
-            code = (code << 1) | bits.read(1)
-            sym = self.table.get((ln, code))
-            if sym is not None:
-                return sym
-        raise LzxError("bad huffman code")
-
-
 def _read_lengths(bits: _Bits, lens: list[int], first: int, last: int):
     """Delta-decode path lengths [first, last) against ``lens`` through
     the 4-bit-length pretree with run symbols 17/18/19."""
-    pre = _Huff([bits.read(4) for _ in range(_PRETREE_SYMS)])
+    pre = PrefixCode.from_lengths([bits.read(4) for _ in range(_PRETREE_SYMS)])
     x = first
     guard = 0
     while x < last:
         guard += 1
         if guard > 4 * (last - first) + 64:
             raise LzxError("length table does not terminate")
-        z = pre.decode(bits)
+        z = pre.read(bits)
         if z == 17:
             n = bits.read(4) + 4
             for _ in range(min(n, last - x)):
@@ -138,7 +115,7 @@ def _read_lengths(bits: _Bits, lens: list[int], first: int, last: int):
                 x += 1
         elif z == 19:
             n = bits.read(1) + 4
-            z2 = pre.decode(bits)
+            z2 = pre.read(bits)
             v = (lens[x] - z2) % 17
             for _ in range(min(n, last - x)):
                 lens[x] = v
@@ -181,6 +158,13 @@ class LzxDecoder:
         remaining size, trees) persists across the per-frame loop —
         the mspack/lzxd decode structure.
         """
+        try:
+            return self._decompress(data, out_len, abs_base)
+        except BitstreamError as exc:     # no prefix code word matched
+            raise LzxError("bad huffman code") from exc
+
+    def _decompress(self, data: bytes, out_len: int,
+                    abs_base: int) -> bytes:
         bits = _Bits(data)
         out = bytearray()
         if not self.header_read:
@@ -206,15 +190,15 @@ class LzxDecoder:
                     elif btype in (1, 2):
                         aligned = None
                         if btype == 2:
-                            aligned = _Huff([bits.read(3)
-                                             for _ in range(_ALIGNED_SYMS)])
+                            aligned = PrefixCode.from_lengths(
+                                [bits.read(3) for _ in range(_ALIGNED_SYMS)])
                         _read_lengths(bits, self.main_lens, 0, _NUM_CHARS)
                         _read_lengths(bits, self.main_lens, _NUM_CHARS,
                                       self.main_elements)
-                        main = _Huff(self.main_lens)
+                        main = PrefixCode.from_lengths(self.main_lens)
                         _read_lengths(bits, self.length_lens, 0,
                                       _SECONDARY_LENS)
-                        lengths = _Huff(self.length_lens)
+                        lengths = PrefixCode.from_lengths(self.length_lens)
                     else:
                         raise LzxError(f"bad block type {btype}")
                 run = min(block_togo, frame_end - len(out))
@@ -275,8 +259,8 @@ class LzxDecoder:
         return p + 12
 
     def _coded_block(self, bits: _Bits, out: bytearray, togo: int,
-                     main: _Huff, lengths: _Huff,
-                     aligned: _Huff | None) -> int:
+                     main: PrefixCode, lengths: PrefixCode,
+                     aligned: PrefixCode | None) -> int:
         """Decode symbols until at least ``togo`` bytes are produced.
 
         Returns the ACTUAL byte count, which may exceed ``togo`` when
@@ -288,7 +272,7 @@ class LzxDecoder:
         R = self.R
         produced = 0
         while produced < togo:
-            sym = main.decode(bits)
+            sym = main.read(bits)
             if sym < _NUM_CHARS:
                 out.append(sym)
                 produced += 1
@@ -297,9 +281,9 @@ class LzxDecoder:
             slot = me >> 3
             length_header = me & 7
             if length_header == 7:
-                if lengths.empty:
+                if not lengths.symbols:
                     raise LzxError("missing length tree")
-                match_len = lengths.decode(bits) + 7 + 2
+                match_len = lengths.read(bits) + 7 + 2
             else:
                 match_len = length_header + 2
             if slot == 0:
@@ -314,7 +298,7 @@ class LzxDecoder:
                 eb = self.extra[slot]
                 if aligned is not None and eb >= 3:
                     offset = self.base[slot] - 2 + (bits.read(eb - 3) << 3)
-                    offset += aligned.decode(bits)
+                    offset += aligned.read(bits)
                 else:
                     offset = self.base[slot] - 2 + bits.read(eb)
                 R[2], R[1], R[0] = R[1], R[0], offset

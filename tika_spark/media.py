@@ -21,6 +21,7 @@ from __future__ import annotations
 import struct
 import zlib
 
+from tika_spark.bits import LsbReader
 from tika_spark.config import ExtractConfig
 
 _DEFAULT = ExtractConfig()
@@ -172,17 +173,7 @@ def _jxl_dims(data: bytes):
 
 
 def _jxl_size_header(bits_data: bytes):
-    pos = [0]
-
-    def u(n):
-        v = 0
-        for k in range(n):
-            byte_i = pos[0] >> 3
-            if byte_i >= len(bits_data):
-                raise ValueError("truncated JXL size header")
-            v |= ((bits_data[byte_i] >> (pos[0] & 7)) & 1) << k
-            pos[0] += 1
-        return v
+    u = LsbReader(bits_data).read
 
     def u32(c0, c1, c2, c3):
         sel = u(2)

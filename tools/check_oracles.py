@@ -8,6 +8,7 @@ oracle (row count, column names, order-insensitive value hash).
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
@@ -36,6 +37,16 @@ def _norm(v) -> str:
     return str(v)
 
 
+def host_size() -> tuple[int, int]:
+    """(cores, driver heap in MB) sized from the host: every core this
+    process may run on (`nproc`) and a quarter of MemTotal, the rule
+    perfbench/run.py uses."""
+    with open("/proc/meminfo", encoding="ascii") as f:
+        mem_kb = next(int(line.split()[1]) for line in f
+                      if line.startswith("MemTotal:"))
+    return len(os.sched_getaffinity(0)), mem_kb // 1024 // 4
+
+
 def main():
     argv = sys.argv[1:]
     json_out = None
@@ -48,11 +59,12 @@ def main():
     results: dict[str, dict] = {}
 
     from pyspark.sql import SparkSession
-    spark = (SparkSession.builder.master("local[8]")
+    cores, heap_mb = host_size()
+    spark = (SparkSession.builder.master(f"local[{cores}]")
              .appName("check_oracles")
-             .config("spark.sql.shuffle.partitions", "8")
+             .config("spark.sql.shuffle.partitions", str(cores))
              .config("spark.sql.adaptive.enabled", "true")
-             .config("spark.driver.memory", "8g")
+             .config("spark.driver.memory", f"{heap_mb}m")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
 
