@@ -1,7 +1,8 @@
 """Headline benchmark: full extraction job + corpus pipeline ops.
 
 Runs at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] (default 32) and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: every core of the host, with a driver
+heap of a quarter of its memory) and prints ONE JSON line:
 {"metric": ..., "value": <total sec>, "unit": "sec",
  "queries": {name: sec, ...}, "sf": <sf>, ...}
 
@@ -25,6 +26,8 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import pyspark.sql.functions as F  # noqa: E402
+
+from tools.check_oracles import host_size  # noqa: E402
 
 
 def force(df) -> int:
@@ -59,7 +62,8 @@ def _probe_mt(spark, cpus: int) -> float:
 
 
 def main():
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores, heap_mb = host_size()
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", cores))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0)
 
@@ -73,7 +77,7 @@ def main():
              # tools/scaling_bench.py) — avoids giant-page stragglers
              .config("spark.sql.files.maxPartitionBytes", "1m")
              .config("spark.sql.files.openCostInBytes", "64k")
-             .config("spark.driver.memory", "24g")
+             .config("spark.driver.memory", f"{heap_mb}m")
              .config("spark.ui.enabled", "false")
              .getOrCreate())
     spark.sparkContext.setLogLevel("ERROR")
@@ -164,7 +168,7 @@ def main():
         dedup.minhash_lsh_pairs(docs, threshold=0.12)))
     timed("dedup_simhash", lambda: force(
         dedup.simhash_pairs(docs, max_hamming=3)))
-    timed("dedup_substring", lambda: force(
+    timed("docs_remove_dup_spans", lambda: force(
         dedup.substring_dup_spans(docs, k=8)))
     timed("ann_topk", lambda: force(similarity.brute_force_topk(
         emb, emb.filter(F.col("vec_id") < 20), k=10)))

@@ -26,10 +26,14 @@ def _pages(spark, n=80):
             F.lit("</p></body></html>")), "UTF-8").alias("html"))
 
 
-def _parsed_rows(trace):
-    """Sum of per-batch row counts from the trace markers."""
-    return sum(int(os.path.basename(p).rsplit("_", 1)[1])
-               for p in glob.glob(os.path.join(trace, "*")))
+def _parsed_rows(markers):
+    """Sum of per-batch row counts from the batch markers written since
+    the last call (the markers read are removed)."""
+    n = 0
+    for p in glob.glob(os.path.join(markers, "*")):
+        n += int(os.path.basename(p).rsplit("_", 1)[1])
+        os.remove(p)
+    return n
 
 
 def test_interrupt_then_resume_matches_one_shot(spark, tmp_path):
@@ -64,32 +68,27 @@ def test_interrupt_then_resume_matches_one_shot(spark, tmp_path):
     assert m.agg(F.sum("n_rows")).first()[0] == 80
 
 
-def test_resume_never_reparses_committed_buckets(spark, tmp_path):
+def test_resume_never_reparses_committed_buckets(spark, tmp_path,
+                                                  batch_markers):
     pages = _pages(spark, 64)
     out = str(tmp_path / "ckpt")
-    t1 = str(tmp_path / "t1")
-    t2 = str(tmp_path / "t2")
-    os.makedirs(t1), os.makedirs(t2)
 
     ck.run_checkpointed(pages, out, n_buckets=8, wave_size=4,
-                        max_waves=1,
-                        config=ExtractConfig(trace_dir=t1))
-    first = _parsed_rows(t1)
+                        max_waves=1, config=ExtractConfig())
+    first = _parsed_rows(batch_markers)
     assert 0 < first < 64  # partial run parsed only wave-1 buckets
 
     ck.run_checkpointed(pages, out, n_buckets=8, wave_size=4,
-                        config=ExtractConfig(trace_dir=t2))
+                        config=ExtractConfig())
     # the resume parses exactly the complement — committed buckets
     # are filtered out BEFORE the parse stage, not after
-    assert _parsed_rows(t2) == 64 - first
+    assert _parsed_rows(batch_markers) == 64 - first
 
     # a third run is a no-op: manifest complete, nothing parsed
-    t3 = str(tmp_path / "t3")
-    os.makedirs(t3)
     s = ck.run_checkpointed(pages, out, n_buckets=8, wave_size=4,
-                            config=ExtractConfig(trace_dir=t3))
+                            config=ExtractConfig())
     assert s["buckets_processed"] == 0 and s["complete"]
-    assert _parsed_rows(t3) == 0
+    assert _parsed_rows(batch_markers) == 0
 
 
 def test_half_written_bucket_is_overwritten_not_duplicated(

@@ -401,19 +401,19 @@ def test_extract_recursive(spark, nested_pages):
     assert "children" not in out[0].asDict()
 
 
-def test_recursive_parses_each_level_once(spark, nested_pages, tmp_path):
+def test_recursive_parses_each_level_once(spark, nested_pages,
+                                          batch_markers):
     # Guards the per-level persist: without it, every isEmpty() probe
     # and the final union re-execute ancestor levels' mapInPandas.
-    # Count parsed rows via the trace_dir batch markers — the total
-    # must equal the number of output rows (each row parsed once).
+    # Count parsed rows via the per-batch markers — the total must
+    # equal the number of output rows (each row parsed once).
     import os
     from tika_spark.config import ExtractConfig
     from tika_spark.pipeline.job import extract_recursive
-    trace = str(tmp_path / "trace")
-    os.makedirs(trace)
-    cfg = ExtractConfig(mode="text", trace_dir=trace)
+    cfg = ExtractConfig(mode="text")
     out = extract_recursive(nested_pages, config=cfg).collect()
-    parsed = sum(int(f.rsplit("_", 1)[1]) for f in os.listdir(trace))
+    parsed = sum(int(f.rsplit("_", 1)[1])
+                 for f in os.listdir(batch_markers))
     assert parsed == len(out)
 
 
@@ -892,7 +892,9 @@ class TestIWorkHardening:
         assert r["text"] == "c1\tc2\tc3\nc4\n"  # c4 not dropped
 
     def test_iwork_zip_bomb_capped(self):
-        from tika_spark.pkg.iwork import extract_iwork
+        import pandas as pd
+
+        from tika_spark.pipeline.stages import process_batch
         big = "<sf:p>" + ("x " * 2_000_000) + "</sf:p>"
         xml = ('<?xml version="1.0"?><sl:document xmlns:sl='
                '"http://developer.apple.com/namespaces/sl" xmlns:sf='
@@ -902,7 +904,10 @@ class TestIWorkHardening:
         blob = self._zip({"buildVersionHistory.plist": "<plist/>",
                           "index.xml": xml})
         assert len(blob) < 100_000  # it really is a bomb
-        r = extract_iwork(blob)
+        r = process_batch(pd.DataFrame({"url": ["bomb.pages"],
+                                        "html": [blob]}),
+                          ExtractConfig(mode="text")).iloc[0]
+        assert r["mime"] == "application/vnd.apple.pages"
         assert r["status"] == "output_limit"
         assert len(r["text"]) <= 1_000_000
 

@@ -66,7 +66,7 @@ def page_tables(html: bytes) -> list[tuple[int, int, list[str]]]:
     """(table_idx, row_idx, cells) triples for one page."""
     from tika_spark import charset as cs
     data = bytes(html or b"")
-    enc = cs.html_charset(data, None, "windows-1252")
+    enc = cs.html_charset(data)
     root = build_dom(cs.decode(data, enc))
     _, body = normalize_tree(root)
     out: list[tuple[int, int, list[str]]] = []

@@ -540,15 +540,14 @@ def detect_statistical(data: bytes, declared: str | None = None) -> str:
     return DEFAULT_CHARSET
 
 
-def html_charset(data: bytes, declared_type: str | None = None,
-                 default: str = DEFAULT_CHARSET) -> str:
+def html_charset(data: bytes, declared_type: str | None = None) -> str:
     """The full HTML charset cascade (HtmlParser.java:81-165 order)."""
     cs = meta_charset(data)
     if cs:
         return cs
     declared = charset_from_content_type(declared_type)
     got = detect_statistical(data, declared=declared)
-    return got or default
+    return got or DEFAULT_CHARSET
 
 
 def _decode_iso2022_cn(data: bytes) -> str:

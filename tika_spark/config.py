@@ -9,15 +9,22 @@ engine is safe against adversarial pages (zip bombs, HTML bombs):
   (reference: tika-core/.../detect/TextDetector.java:48)
 - statistical charset detection reads at most ``CHARSET_PREFIX`` bytes
   (reference: tika-parsers/.../txt/CharsetDetector.java:97)
-- output chars <= max(OUTPUT_MIN_BYTES, OUTPUT_RATIO * input bytes)
+- output chars <= max(OUTPUT_MIN_CHARS, OUTPUT_RATIO * input bytes)
   (reference: tika-core/.../sax/SecureContentHandler.java:65-80)
-- plain-text write limit ``WRITE_LIMIT`` chars
-  (reference: tika-core/.../sax/WriteOutContentHandler.java:125)
+- an optional write limit of ``ExtractConfig.write_limit`` chars
+  (reference: tika-core/.../sax/WriteOutContentHandler.java:110-146)
+
+Both output limits are applied once, to every route, where
+``pipeline.stages.process_batch`` dispatches a document to its
+extractor, as the reference wraps every parser in the same two
+content-handler decorators; extractors do not cut their own text.
+The archive and table walks (pkg, sqlite, dbf) also stop reading
+members and rows at ``output_limit``, which bounds their work.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 MAGIC_PREFIX = 65536  # MimeTypes.getMinLength() — covers ISO9660's
 #                       CD001 volume descriptor at offset 32769
@@ -46,6 +53,11 @@ DEFAULT_CHARSET = "windows-1252"
 SIZE_BUCKET_BOUNDS = [4_096, 65_536, 1_048_576, 8_388_608]
 
 
+def output_limit(n_bytes: int) -> int:
+    """Most output chars an input of ``n_bytes`` may yield."""
+    return max(OUTPUT_MIN_CHARS, OUTPUT_RATIO * max(1, n_bytes))
+
+
 @dataclass(frozen=True)
 class ExtractConfig:
     """Processing options — the ParseContext analog.
@@ -61,17 +73,5 @@ class ExtractConfig:
     # 0 = unlimited (the CLI -t/-T modes); WRITE_LIMIT mirrors the
     # parseToString facade default for callers who want it
     write_limit: int = 0
-    output_min_chars: int = OUTPUT_MIN_CHARS
-    output_ratio: int = OUTPUT_RATIO
     # input-side byte cap (truncate-and-flag); 0 = unlimited
     max_input_bytes: int = MAX_INPUT_BYTES
-    default_charset: str = DEFAULT_CHARSET
-    identify_language: bool = True
-    collect_links: bool = True
-    summary_chars: int = 500         # ParserPostProcessor.java:58 first-500 summary
-    size_bucket_bounds: tuple = field(default=tuple(SIZE_BUCKET_BOUNDS))
-    # test/diagnostic hook: when set, each process_batch appends a
-    # marker file (one per batch, named <uuid>_<n_rows>) so tests can
-    # assert the parse stage executed exactly once per row (guards the
-    # extract_recursive persist contract)
-    trace_dir: str | None = None

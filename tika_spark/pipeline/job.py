@@ -25,18 +25,16 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-from tika_spark.config import MAX_EMBED_DEPTH, ExtractConfig
+from tika_spark.config import (MAX_EMBED_DEPTH, SIZE_BUCKET_BOUNDS,
+                               ExtractConfig)
 from tika_spark.pipeline.stages import EXTRACT_SCHEMA, make_extract_fn
 
-_DEFAULT = ExtractConfig()
-
-
-def with_size_bucket(df: DataFrame,
-                     bounds=_DEFAULT.size_bucket_bounds) -> DataFrame:
-    """Add ``size_bucket`` = index of the first bound >= len(html)."""
-    expr = F.lit(len(bounds))
-    for idx in range(len(bounds) - 1, -1, -1):
-        expr = F.when(F.length("html") <= F.lit(bounds[idx]),
+def with_size_bucket(df: DataFrame) -> DataFrame:
+    """Add ``size_bucket`` = index of the first of
+    ``SIZE_BUCKET_BOUNDS`` >= len(html)."""
+    expr = F.lit(len(SIZE_BUCKET_BOUNDS))
+    for idx in range(len(SIZE_BUCKET_BOUNDS) - 1, -1, -1):
+        expr = F.when(F.length("html") <= F.lit(SIZE_BUCKET_BOUNDS[idx]),
                       F.lit(idx)).otherwise(expr)
     return df.withColumn("size_bucket", expr)
 
@@ -73,7 +71,7 @@ def extract(df: DataFrame, mode: str = "text",
     if repartition == 0:
         arranged = slim
     else:
-        bucketed = with_size_bucket(slim, config.size_bucket_bounds)
+        bucketed = with_size_bucket(slim)
         n_parts = (repartition
                    or slim.sparkSession.sparkContext.defaultParallelism)
         # spread giants uniformly, then make batches size-homogeneous

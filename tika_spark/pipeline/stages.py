@@ -7,7 +7,9 @@ chain until a route is found; unknown types become ``status='no_parser'``
 rows (EmptyParser fallback, never a failure). A parser exception is
 caught per document and becomes ``status='error'`` (the ForkParser
 fault-isolation intent, fork/ForkParser.java — a poison document must
-never kill a partition).
+never kill a partition). Every extractor's output passes through one
+output guard (:func:`_guard_output`), as every reference parser sits
+behind the same SecureContentHandler and WriteOutContentHandler.
 
 Heavy singletons (detection tables, language model) are module-level,
 initialized once per Python worker and reused across batches
@@ -21,7 +23,7 @@ import time
 
 import pandas as pd
 
-from tika_spark.config import ExtractConfig
+from tika_spark.config import ExtractConfig, output_limit
 from tika_spark.dbparse import extract_dbf, extract_sqlite
 from tika_spark.html.extract import extract_html
 from tika_spark.mime import lattice
@@ -307,17 +309,29 @@ def _empty_result() -> dict:
             "links": [], "metadata": {}, "status": "no_parser"}
 
 
+def _guard_output(r: dict, n_bytes: int, write_limit: int) -> None:
+    """Cut an extractor's text to the zip-bomb ratio bound
+    (SecureContentHandler.java:65-80: max(1M, 100x input bytes)), then
+    to the write limit (WriteOutContentHandler.java:110-146), flagging
+    the row's status. Spans starting past the cut are dropped and the
+    rest end inside the text."""
+    text = r["text"]
+    limit = output_limit(n_bytes)
+    if len(text) > limit:
+        text, r["status"] = text[:limit], "output_limit"
+    if write_limit and len(text) > write_limit:
+        text, r["status"] = text[:write_limit], "write_limit"
+    if len(text) < len(r["text"]):
+        r["text"] = text
+        r["spans"] = [(s, min(e, len(text)), k)
+                      for s, e, k in r.get("spans", []) if s < len(text)]
+
+
 def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
                   part_id: int = -1) -> pd.DataFrame:
     """Extract one Arrow batch (pandas DataFrame in/out)."""
     t0 = time.perf_counter()
     n = len(pdf)
-    if config.trace_dir:
-        import os
-        import uuid
-        with open(os.path.join(config.trace_dir,
-                               f"{uuid.uuid4().hex}_{n}"), "w"):
-            pass
     html = pdf["html"]
     urls = pdf["url"] if "url" in pdf else pd.Series([None] * n,
                                                      index=pdf.index)
@@ -380,6 +394,8 @@ def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
                                     mime=mimes[i])
                 else:
                     results[k] = fn(data_i, urls[i], decl_i, config)
+                _guard_output(results[k], len(data_i or b""),
+                              config.write_limit)
                 if capped and results[k].get("status") != "error":
                     results[k]["status"] = "input_capped"
             except Exception as e:  # poison doc -> error row, task survives
@@ -424,14 +440,10 @@ def process_batch(pdf: pd.DataFrame, config: ExtractConfig,
 
     texts = pd.Series([r["text"] for r in results], index=pdf.index)
 
-    langs = [None] * n
-    dists = [None] * n
-    if config.identify_language or config.mode == "language":
-        from tika_spark.language import default_model
-        model = default_model()
-        ident = model.identify_batch(texts)
-        langs = ident["lang"].tolist()
-        dists = ident["lang_distance"].tolist()
+    from tika_spark.language import default_model
+    ident = default_model().identify_batch(texts)
+    langs = ident["lang"].tolist()
+    dists = ident["lang_distance"].tolist()
 
     if config.mode == "language":
         # -l CLI mode: the identified language IS the output text

@@ -26,20 +26,13 @@ def extract_text(data: bytes, url: str | None = None,
     decoded = cs.decode(data, charset)          # BOM dropped here
     text = safe_chars(decoded)
 
-    status = "ok"
-    limit = max(config.output_min_chars, config.output_ratio * max(1, len(data)))
-    if len(text) > limit:
-        text, status = text[:limit], "output_limit"
-    if config.write_limit and len(text) > config.write_limit:
-        text, status = text[:config.write_limit], "write_limit"
-    body = text + "\n"  # single <p> block through the layout contract
     return {
         "charset": charset,
         "title": None,
-        "text": body,
+        "text": text + "\n",  # single <p> block through the layout contract
         "spans": [(0, len(text), "p")],
         "links": [],
         "metadata": {"Content-Encoding": [charset],
                      "Content-Type": ["text/plain"]},
-        "status": status,
+        "status": "ok",
     }

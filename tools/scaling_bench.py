@@ -6,6 +6,9 @@ emit, mode text-main) at local[N] and local[4N], one JVM at a time.
 
     python tools/scaling_bench.py [n_pages] [N]
 
+N defaults to a quarter of the host's cores (at least 1); the driver
+heap is a quarter of the host's memory.
+
 Prints one JSON line: throughput at each level + efficiency
 (T_N/T_4N)/4; the driver-facing writeup lands in BENCH/BASELINE.md.
 """
@@ -19,6 +22,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from tools.check_oracles import host_size  # noqa: E402
 
 
 def session(cpus: int):
@@ -34,7 +39,7 @@ def session(cpus: int):
             # count; default 128m bin-packing left 10× byte skew)
             .config("spark.sql.files.maxPartitionBytes", "1m")
             .config("spark.sql.files.openCostInBytes", "64k")
-            .config("spark.driver.memory", "48g")
+            .config("spark.driver.memory", f"{host_size()[1]}m")
             .config("spark.ui.enabled", "false")
             .getOrCreate())
 
@@ -168,12 +173,13 @@ def main_interleaved(n_pages: int, base: int, mode: str,
 
 def main():
     n_pages = int(sys.argv[1]) if len(sys.argv) > 1 else 100000
-    base = int(sys.argv[2]) if len(sys.argv) > 2 else 8
+    cores = host_size()[0]
+    base = int(sys.argv[2]) if len(sys.argv) > 2 else max(1, cores // 4)
     mode = os.environ.get("SCALING_MODE", "text-main")
     input_path = f"/tmp/scaling_pages_bucketed_{n_pages}"
 
     if not os.path.isdir(input_path):
-        spark = session(32)
+        spark = session(cores)
         spark.sparkContext.setLogLevel("ERROR")
         import pyspark.sql.functions as F
         from tika_spark.fixtures.pages import generate_pages_df

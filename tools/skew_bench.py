@@ -21,8 +21,11 @@ one JSON line and appending a row block to BENCH/SKEW.md:
               minhash_lsh_pairs. The max_bucket cap bounds the
               candidate explosion; criterion: within 2x of uniform.
 
-Usage:  python tools/skew_bench.py [--cpus 8] [--pages 16000]
+Usage:  python tools/skew_bench.py [--cpus N] [--pages 16000]
         [--docs 30000] [--giant-mb 24] [--write-md]
+
+``--cpus`` defaults to $SPARK_GRAFT_CPUS, else every core of the host;
+the driver heap is a quarter of the host's memory.
 """
 
 from __future__ import annotations
@@ -35,6 +38,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(
     os.path.abspath(__file__))))
+
+from tools.check_oracles import host_size  # noqa: E402
 
 
 def _timed(fn, reps: int = 2):
@@ -211,9 +216,9 @@ def lsh_band_case(spark, n_docs: int) -> dict:
 
 def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__)
+    cores, heap_mb = host_size()
     ap.add_argument("--cpus", type=int,
-                    default=int(os.environ.get("SPARK_GRAFT_CPUS",
-                                               "8")))
+                    default=int(os.environ.get("SPARK_GRAFT_CPUS", cores)))
     ap.add_argument("--pages", type=int, default=16000)
     ap.add_argument("--docs", type=int, default=30000)
     ap.add_argument("--rows", type=int, default=2_000_000)
@@ -226,7 +231,7 @@ def main(argv=None):
     from pyspark.sql import SparkSession
     spark = (SparkSession.builder.master(f"local[{args.cpus}]")
              .appName("tika-spark-skew-bench")
-             .config("spark.driver.memory", "48g")
+             .config("spark.driver.memory", f"{heap_mb}m")
              .config("spark.driver.maxResultSize", "4g")
              .config("spark.sql.shuffle.partitions", str(args.cpus))
              .config("spark.sql.adaptive.enabled", "true")
