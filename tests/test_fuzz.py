@@ -279,8 +279,7 @@ def test_justext_classify_never_raises(text, anchor):
     from tika_spark.html.boilerpipe import TextBlock
     from tika_spark.html.justext import classify_context_free
     words = text.split()
-    b = TextBlock(text, len(words), min(anchor, len(words)), 0,
-                  tokens=words)
+    b = TextBlock(text, len(words), min(anchor, len(words)), 0)
     assert classify_context_free(b) in ("good", "bad", "short",
                                         "neargood")
 

@@ -12,11 +12,13 @@ Pin the semantics of the reference's contracts:
 """
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from tika_spark import charset as cs
 from tika_spark.config import ExtractConfig
 from tika_spark.html import extract_html
-from tika_spark.html.dom import build_dom, normalize_tree
+from tika_spark.html.dom import El, build_dom, normalize_tree
 from tika_spark.html.layout import resolve_url, safe_chars, serialize_body
 
 
@@ -169,6 +171,81 @@ class TestLinks:
         assert "click" in a[3] and "pic" in a[3] and "me" in a[3]
 
 
+def _links(html, mode, url="http://h/dir/page"):
+    if isinstance(html, str):
+        html = html.encode("utf-8")
+    return extract_html(html, url, config=ExtractConfig(mode=mode))["links"]
+
+
+def _fixture_html_rows():
+    from tika_spark.fixtures.pages import GIANT_EVERY, VARIANTS, gen_row
+    rows = [gen_row(VARIANTS.index(v) + len(VARIANTS)) for v in VARIANTS
+            if v.startswith(("html", "xhtml"))]
+    return rows + [gen_row(GIANT_EVERY)]
+
+
+class TestLinksOneWalk:
+    """text-main and text-main-justext collect links in the Boilerpipe
+    segmenter walk, text mode in the layout serializer: both walks
+    drive layout.LinkCollector and must agree link for link."""
+
+    MODES = ("text-main", "text-main-justext")
+
+    def _same_as_text(self, html, **kw):
+        want = _links(html, "text", **kw)
+        for mode in self.MODES:
+            assert _links(html, mode, **kw) == want, mode
+        return want
+
+    def test_fixture_html_variants(self):
+        rows = _fixture_html_rows()
+        assert rows[-1]["source"] == "giant_html"
+        n = 0
+        for row in rows:
+            n += len(self._same_as_text(row["html"], url=row["url"]))
+        assert n > 0
+
+    def test_fuzz_diff_corpus(self):
+        from test_html_fuzz_diff import _corpus
+        assert sum(len(self._same_as_text(frag)) for frag in _corpus()) > 0
+
+    @pytest.mark.parametrize("html", [
+        # nested anchors pass their text up
+        "<p><a href='/o'>out <a href='/i'>in</a> tail</a></p>",
+        "<a href='/1'>a<b><a href='/2'>b<a href='/3'>c</a></a></b></a>",
+        # an anchor without href is no link, but its text still reaches
+        # the enclosing anchor
+        "<p><a name='x'>named</a> <a href='/y'>go <a>bare</a></a></p>",
+        # img alt inside an anchor; img src is a link of its own
+        "<a href='/pic' title='T'>see <img src='p.png' alt='alt text' "
+        "title='it'> now</a><img src='/solo.gif'>",
+        "<a href='/e'><img src='x.png' alt=''></a>",
+        # <base href> resolution
+        "<html><head><base href='http://b.example/x/'></head><body>"
+        "<a href='rel'>r</a><a href='?q=1'>q</a><a href='mailto:m@x'>m"
+        "</a><img src='../i.png'></body></html>",
+        # anchor text spanning block tags
+        "<a href='/span'><p>one</p><div>two<br>three</div><li>four</a>",
+        "<table><tr><td><a href='/t'>cell<td>next</a></table>",
+        # script/style inside an anchor contribute nothing
+        "<a href='/s'>keep<script>drop()</script><style>.x{}</style>"
+        " kept</a>",
+    ])
+    def test_hand_cases(self, html):
+        assert self._same_as_text(html)
+
+    def test_text_main_does_not_serialize(self, monkeypatch):
+        from tika_spark.html import extract as html_extract
+
+        def refuse(*a, **k):
+            raise AssertionError("serialize_body called")
+        want = {m: _links(TestBoilerpipe.BOILER, m) for m in self.MODES}
+        monkeypatch.setattr(html_extract, "serialize_body", refuse)
+        for mode in self.MODES:
+            assert _links(TestBoilerpipe.BOILER, mode) == want[mode]
+            assert want[mode]
+
+
 class TestBoilerpipe:
     BOILER = (
         b"<html><head><title>B</title></head><body>"
@@ -203,6 +280,80 @@ class TestBoilerpipe:
     def test_full_mode_keeps_everything(self):
         r = extract_html(self.BOILER, config=ExtractConfig(mode="text"))
         assert "Home" in r["text"] and "footer" in r["text"]
+
+
+# letters, digits, '_', punctuation, combining marks (not alnum), CJK,
+# Arabic-Indic digits and other non-ASCII alphanumerics
+_TOKEN_CHARS = st.sampled_from(
+    list("abzAZ059_.,;:!?-'\"()[]*|/") + [
+        "\u0301", "\u0308", "\u064b", "\u00ab", "\u00bb", "\u2014",
+        "\u2026", "\u4e2d", "\u6587", "\u0663", "\u0660", "\u00e9",
+        "\u00df", "\u03a9", "\u2163", "\u00b2"])
+_TOKENS = st.lists(st.one_of(st.text(_TOKEN_CHARS, min_size=1, max_size=12),
+                             st.text(_TOKEN_CHARS, min_size=70,
+                                     max_size=120)),
+                   max_size=60)
+_SEPS = st.sampled_from([" ", "  ", "\n", "\t ", "\xa0"])
+
+
+def _reference_block(tokens):
+    """(num_words, wrapped_words, wrapped_lines) by the published
+    per-token loops: a word holds a char passing str.isalnum(), and
+    words wrap greedily at 80 columns."""
+    words = [t for t in tokens if any(c.isalnum() for c in t)]
+    line_len, lines, on_line = -1, 0, 0
+    for w in words:
+        on_line += 1
+        line_len += len(w) + 1
+        if line_len > 80:
+            lines += 1
+            line_len = len(w)
+            on_line = 1
+    if lines == 0:
+        return len(words), len(words), 1
+    return len(words), len(words) - on_line, lines
+
+
+class TestSegmenterWordWork:
+    """The segmenter counts words with one regex pass per block and
+    wraps them with one regex pass (or not at all when the block fits
+    one line); both equal the per-token loops."""
+
+    @settings(max_examples=300, deadline=None)
+    @given(tokens=_TOKENS, anchor=_TOKENS, sep=_SEPS)
+    def test_blocks_match_per_token_loops(self, tokens, anchor, sep):
+        from tika_spark.html.boilerpipe import segment_blocks
+        p, a = El("p"), El("a")
+        a.children.append(sep.join(anchor))
+        p.children += [sep.join(tokens) + sep, a]
+        body = El("body")
+        body.children.append(p)
+        blocks = segment_blocks(body)
+        n, wrapped_words, wrapped_lines = _reference_block(tokens + anchor)
+        if n == 0:
+            assert blocks == []
+            return
+        (b,) = blocks
+        assert b.text == " ".join(tokens + anchor)
+        assert (b.num_words, b.wrapped_words, b.wrapped_lines) == \
+            (n, wrapped_words, wrapped_lines)
+        assert b.anchor_words == _reference_block(anchor)[0]
+
+    @settings(max_examples=200, deadline=None)
+    @given(tokens=_TOKENS, sep=_SEPS)
+    def test_textblock_from_text(self, tokens, sep):
+        from tika_spark.html.boilerpipe import TextBlock
+        n, wrapped_words, wrapped_lines = _reference_block(tokens)
+        b = TextBlock(sep.join(tokens), n, 0, 0)
+        assert (b.wrapped_words, b.wrapped_lines) == \
+            (wrapped_words, wrapped_lines)
+
+    def test_long_first_word_counts_a_break(self):
+        from tika_spark.html.boilerpipe import TextBlock
+        b = TextBlock("x" * 81 + " tail", 2, 0, 0)
+        assert (b.wrapped_words, b.wrapped_lines) == (1, 2)
+        b = TextBlock("x" * 81, 1, 0, 0)
+        assert (b.wrapped_words, b.wrapped_lines) == (0, 1)
 
 
 class TestGuards:
@@ -291,8 +442,7 @@ class TestDomRecoveryHardening:
     def test_wrap_ignores_separator_tokens(self):
         from tika_spark.html.boilerpipe import TextBlock
         text = "word " + "* " * 50
-        b = TextBlock(text, num_words=1, anchor_words=0, offset=0,
-                      tokens=text.split())
+        b = TextBlock(text, num_words=1, anchor_words=0, offset=0)
         assert b.wrapped_words >= 0 and b.text_density >= 0.0
 
 
@@ -395,8 +545,7 @@ class TestJustext:
         out = []
         for text, anchor in specs:
             words = text.split()
-            out.append(TextBlock(text, len(words), anchor, 0,
-                                 tokens=words))
+            out.append(TextBlock(text, len(words), anchor, 0))
         return out
 
     def test_context_free_classes(self):

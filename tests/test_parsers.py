@@ -78,6 +78,23 @@ class TestXml:
                 b"<x>&a;</x>")
         assert extract_xml(bomb)["status"] == "error"
 
+    def test_entity_declaration_past_4k_refused(self):
+        # a 5,000-byte comment pushes the DTD past the first 4 KB; its
+        # nested entities expand 5.3 KB of input to 1,000,001 chars
+        ents = "<!ENTITY a 'xxxxxxxxxx'>" + "".join(
+            f"<!ENTITY {n} '{('&' + p + ';') * 10}'>"
+            for p, n in zip("abcde", "bcdef"))
+        bomb = (f"<?xml version='1.0'?>\n<!--{'c' * 5000}-->\n"
+                f"<!DOCTYPE r [{ents}]>\n<r>&f;x</r>").encode()
+        assert len(bomb) < 5400
+        assert extract_xml(bomb)["status"] == "error"
+
+    def test_entity_text_outside_dtd_is_content(self):
+        r = extract_xml(b"<?xml version='1.0'?><!DOCTYPE x SYSTEM 'x.dtd'>"
+                        b"<x><![CDATA[<!ENTITY a 'b'>]]> &amp; &#65;</x>")
+        assert r["status"] == "ok"
+        assert r["text"] == "<!ENTITY a 'b'> & A\n"
+
 
 class TestFeed:
     RSS = (b"<?xml version='1.0'?><rss version='2.0'><channel>"

@@ -123,40 +123,50 @@ for _b in list(range(0x00, 0x09)) + [0x0B] + list(range(0x0E, 0x1B)) \
     _CTRL_MASK[_b] = True
 
 
-def _score_utf8(buf: np.ndarray) -> int:
-    """Confidence 0-100 that buf is valid UTF-8 with multibyte content."""
-    if _CTRL_MASK[buf].any():
+# The byte-class recognizers read only how often each byte value occurs:
+# ``counts`` is the prefix's 256-bin histogram, built once per document.
+
+
+def _score_utf8(raw: bytes, counts: np.ndarray) -> int:
+    """Confidence 0-100 that raw is valid UTF-8 with multibyte content."""
+    if counts[_CTRL_MASK].any():
         return 0  # text in a sane charset has no raw control bytes
     try:
-        raw = buf.tobytes()
         raw.decode("utf-8")
     except UnicodeDecodeError as e:
         # allow a truncated final sequence only
-        if e.start < len(buf) - 4:
+        if e.start < len(raw) - 4:
             return 0
         try:
             raw[:e.start].decode("utf-8")
         except UnicodeDecodeError:
             return 0
-    n_multi = int((buf >= 0xC0).sum())
+    n_multi = int(counts[0xC0:].sum())
     if n_multi == 0:
-        return 15 if (buf < 0x80).all() else 0   # pure ASCII: weak signal
+        # pure ASCII: weak signal
+        return 0 if counts[0x80:].any() else 15
     return min(100, 60 + n_multi)
 
 
-def _score_utf16(buf: np.ndarray, little: bool) -> int:
-    """UTF-16 of one-script text: high bytes concentrate on <=2 values
-    (0x00 for latin, the Unicode block byte otherwise)."""
+def _score_utf16(buf: np.ndarray) -> tuple[int, int]:
+    """(utf-16-le, utf-16-be) scores. UTF-16 of one-script text: high
+    bytes concentrate on <=2 values (0x00 for latin, the Unicode block
+    byte otherwise)."""
     if len(buf) < 16 or len(buf) % 2:
-        return 0
-    hi = buf[1::2] if little else buf[0::2]
-    lo = buf[0::2] if little else buf[1::2]
+        return 0, 0
     # bincount beats np.unique (no sort) — this runs on every
-    # statistical-tier document
-    hi_counts = np.bincount(hi, minlength=256)
-    top2 = float(np.partition(hi_counts, -2)[-2:].sum()) / len(hi)
-    lo_counts = np.bincount(lo, minlength=256)
-    lo_top2 = float(np.partition(lo_counts, -2)[-2:].sum()) / len(lo)
+    # statistical-tier document; the even and odd byte histograms serve
+    # both byte orders
+    even = np.bincount(buf[0::2], minlength=256)
+    odd = np.bincount(buf[1::2], minlength=256)
+    n = len(buf) // 2
+    return _utf16_shape(odd, even, n), _utf16_shape(even, odd, n)
+
+
+def _utf16_shape(hi_counts: np.ndarray, lo_counts: np.ndarray,
+                 n: int) -> int:
+    top2 = float(np.partition(hi_counts, -2)[-2:].sum()) / n
+    lo_top2 = float(np.partition(lo_counts, -2)[-2:].sum()) / n
     n_lo_vals = int((lo_counts > 0).sum())
     # real UTF-16: high bytes nearly constant, low bytes diverse;
     # a run of one repeated ASCII char concentrates BOTH -> reject
@@ -165,21 +175,18 @@ def _score_utf16(buf: np.ndarray, little: bool) -> int:
     return 0
 
 
-def _score_sbcs_cyrillic(buf: np.ndarray, ranges) -> int:
-    """Single-byte Cyrillic codepages: letters in the given byte ranges,
-    words split by ASCII space 0x20."""
-    if _CTRL_MASK[buf].any():
+def _score_sbcs_cyrillic(counts: np.ndarray, ranges) -> int:
+    """Single-byte Cyrillic codepages: letters in the given (disjoint,
+    high-half) byte ranges, words split by ASCII space 0x20."""
+    if counts[_CTRL_MASK].any():
         return 0
-    high = buf[buf >= 0x80]
-    if len(high) < 8:
+    n_high = int(counts[0x80:].sum())
+    if n_high < 8:
         return 0
-    mask = np.zeros(len(high), dtype=bool)
-    for lo, hi in ranges:
-        mask |= (high >= lo) & (high <= hi)
-    rate = float(mask.mean())
-    has_ascii_space = float((buf == 0x20).mean()) > 0.02
+    rate = sum(int(counts[lo:hi + 1].sum()) for lo, hi in ranges) / n_high
+    has_ascii_space = int(counts[0x20]) / int(counts.sum()) > 0.02
     if rate > 0.85 and has_ascii_space:
-        # below the ngram recognizers' confident range (_score_sbcs_ngram
+        # below the ngram recognizers' confident range (_ngram_scores
         # tops out at 92) so per-language bigram evidence wins when the
         # blunt byte-range test fires for several Cyrillic layouts
         return 60
@@ -194,16 +201,16 @@ _CP1252_PUNCT = np.array(
      0x94, 0x95, 0x96, 0x97, 0x99, 0x9B], dtype=np.uint8)
 
 
-def _score_cp1252_punct(buf: np.ndarray) -> int:
+def _score_cp1252_punct(counts: np.ndarray) -> int:
     """Mostly-ASCII text whose high bytes are all windows-1252 smart
     punctuation: the classic latin-1-vs-1252 tell (ICU resolves the
     whole 8859-1 family to windows-1252 when C1 marks appear)."""
-    high = buf[buf >= 0x80]
-    if len(high) < 2:
+    n_high = int(counts[0x80:].sum())
+    if n_high < 2:
         return 0
-    punct = np.isin(high, _CP1252_PUNCT)
-    accents = (high >= 0xC0)   # latin letters allowed alongside
-    if bool((punct | accents).all()) and punct.any():
+    n_punct = int(counts[_CP1252_PUNCT].sum())
+    n_accents = int(counts[0xC0:].sum())   # latin letters allowed alongside
+    if n_punct and n_punct + n_accents == n_high:
         return 65
     return 0
 
@@ -214,6 +221,8 @@ def _score_iso2022(raw: bytes) -> tuple[str, int] | None:
     longer/more specific. ISO-2022-CN has no Python codec — decode
     routes through the in-repo RFC 1922 state decoder
     (:func:`_decode_iso2022_cn`)."""
+    if b"\x1b" not in raw:
+        return None   # every designation starts with ESC
     for seq, cs in ((b"\x1b$)C", "iso2022_kr"),
                     (b"\x1b$)A", "iso-2022-cn"),   # GB2312 designation
                     (b"\x1b$)G", "iso-2022-cn"),   # CNS 11643 plane 1
@@ -226,16 +235,21 @@ def _score_iso2022(raw: bytes) -> tuple[str, int] | None:
     return None
 
 
-def _score_cp500(buf: np.ndarray) -> int:
+def _ebcdic_shape(counts: np.ndarray) -> bool:
+    """The structural EBCDIC gate: space (0x40) is frequent and the
+    ASCII control/space region below it nearly empty."""
+    n = int(counts.sum())
+    return n >= 32 and int(counts[0x40]) / n > 0.05 \
+        and int(counts[:0x40].sum()) / n < 0.1
+
+
+def _score_cp500(counts: np.ndarray) -> int:
     """EBCDIC: letters in 0x81-0xA9/0xC1-0xE9, space = 0x40, and almost
     nothing in the ASCII-control/space region."""
-    if len(buf) < 32:
+    if not _ebcdic_shape(counts):
         return 0
-    space_rate = float((buf == 0x40).mean())
-    letters = (((buf >= 0x81) & (buf <= 0xA9)) | ((buf >= 0xC1) & (buf <= 0xE9)))
-    letter_rate = float(letters.mean())
-    low_ascii = float((buf < 0x40).mean())
-    if space_rate > 0.05 and letter_rate > 0.4 and low_ascii < 0.1:
+    letters = int(counts[0x81:0xAA].sum()) + int(counts[0xC1:0xEA].sum())
+    if letters / int(counts.sum()) > 0.4:
         return 85
     return 0
 
@@ -251,12 +265,33 @@ def _score_cp500(buf: np.ndarray) -> int:
 # decodable downstream, not a dead end.
 from tika_spark import charset_cp420  # noqa: F401  (registers cp420)
 
+
+def _bigram_table(models: list[tuple[str, list[int]]]
+                  ) -> tuple[list[str], np.ndarray]:
+    """(codecs, member) of trained byte-bigram models: ``member[bigram,
+    k]`` is true when the bigram is in codec k's table, so one lookup
+    scores every model."""
+    member = np.zeros((1 << 16, len(models)), dtype=bool)
+    for k, (_, grams) in enumerate(models):
+        member[grams, k] = True
+    return [codec for codec, _ in models], member
+
+
+def _ngram_scores(rel: np.ndarray, table) -> list[tuple[str, int]]:
+    """(codec, score) per model of ``table``: the hit rate of the input
+    bigrams ``rel`` in its table, scaled to 92."""
+    codecs, member = table
+    hits = np.count_nonzero(member[rel], axis=0).tolist()
+    return [(codec, int(92 * (h / len(rel))))
+            for codec, h in zip(codecs, hits)]
+
+
 _EBCDIC_NGRAM_CODECS = (("cp424", ("he",)), ("cp420", ("ar",)))
 
-_ebcdic_model_cache: list[tuple[str, np.ndarray]] | None = None
+_ebcdic_model_cache: tuple[list[str], np.ndarray] | None = None
 
 
-def _ebcdic_models() -> list[tuple[str, np.ndarray]]:
+def _ebcdic_models() -> tuple[list[str], np.ndarray]:
     """Byte-bigram tables for EBCDIC script variants, trained from
     the in-repo seed corpus exactly like :func:`_sbcs_models` — but
     gated on the EBCDIC letter region (>= 0x41, space 0x40 rides
@@ -282,29 +317,24 @@ def _ebcdic_models() -> list[tuple[str, np.ndarray]]:
                 grams.update(
                     pairs[letter[:-1] | letter[1:]].tolist())
             if grams:
-                models.append((codec, np.array(sorted(grams),
-                                               dtype=np.int32)))
-        _ebcdic_model_cache = models
+                models.append((codec, list(grams)))
+        _ebcdic_model_cache = _bigram_table(models)
     return _ebcdic_model_cache
 
 
-def _score_ebcdic_script(raw: bytes, buf: np.ndarray) -> dict[str, int]:
+def _score_ebcdic_script(buf: np.ndarray,
+                         counts: np.ndarray) -> dict[str, int]:
     """Trained bigram score for EBCDIC script variants, behind the
     structural EBCDIC gate (space 0x40, near-empty control region)."""
     out: dict[str, int] = {}
-    if len(buf) < 32:
-        return out
-    space_rate = float((buf == 0x40).mean())
-    low_ascii = float((buf < 0x40).mean())
-    if space_rate <= 0.05 or low_ascii >= 0.1:
+    if not _ebcdic_shape(counts):
         return out
     letter = buf >= 0x41
     pairs = (buf[:-1].astype(np.int32) << 8) | buf[1:]
     rel = pairs[letter[:-1] | letter[1:]]
     if len(rel) < 8:
         return out
-    for codec, grams in _ebcdic_models():
-        score = _score_sbcs_ngram(rel, grams)
+    for codec, score in _ngram_scores(rel, _ebcdic_models()):
         if score >= 50:
             out[codec] = score
     return out
@@ -414,10 +444,10 @@ _SBCS_NGRAM_CODECS = (
                       "sv")),
 )
 
-_sbcs_model_cache: list[tuple[str, np.ndarray]] | None = None
+_sbcs_model_cache: tuple[list[str], np.ndarray] | None = None
 
 
-def _sbcs_models() -> list[tuple[str, np.ndarray]]:
+def _sbcs_models() -> tuple[list[str], np.ndarray]:
     global _sbcs_model_cache
     if _sbcs_model_cache is None:
         from tika_spark.language.corpus import SEED_TEXT
@@ -438,9 +468,8 @@ def _sbcs_models() -> list[tuple[str, np.ndarray]]:
                 pairs = (arr[:-1] << 8) | arr[1:]
                 grams.update(pairs[hi[:-1] | hi[1:]].tolist())
             if grams:
-                models.append((codec, np.array(sorted(grams),
-                                               dtype=np.int32)))
-        _sbcs_model_cache = models
+                models.append((codec, list(grams)))
+        _sbcs_model_cache = _bigram_table(models)
     return _sbcs_model_cache
 
 
@@ -458,15 +487,6 @@ def _sbcs_rel_bigrams(buf: np.ndarray) -> np.ndarray | None:
     return rel if len(rel) >= 8 else None
 
 
-def _score_sbcs_ngram(rel: np.ndarray, grams: np.ndarray) -> int:
-    # membership via searchsorted on the pre-sorted model (np.isin
-    # re-sorts per call — measurable at fleet batch rates)
-    idx = np.searchsorted(grams, rel)
-    idx[idx >= len(grams)] = 0
-    hits = grams[idx] == rel
-    return int(92 * float(hits.mean()))
-
-
 def detect_statistical(data: bytes, declared: str | None = None) -> str:
     """Best-effort statistical charset detection over <=8000 bytes."""
     raw = data[:CHARSET_PREFIX]
@@ -480,13 +500,25 @@ def detect_statistical(data: bytes, declared: str | None = None) -> str:
         return iso[0]
 
     buf = np.frombuffer(raw, dtype=np.uint8)
-    has_high = bool((buf >= 0x80).any())
+    counts = np.bincount(buf, minlength=256)
+    has_high = bool(counts[0x80:].any())
+    declared = clean_charset(declared)
     scores: dict[str, int] = {}
-    scores["utf-8"] = _score_utf8(buf)
-    scores["utf-16-le"] = _score_utf16(buf, little=True)
-    scores["utf-16-be"] = _score_utf16(buf, little=False)
-    scores["cp500"] = _score_cp500(buf)
-    ebcdic = _score_ebcdic_script(raw, buf)
+    scores["utf-8"] = u = _score_utf8(raw, counts)
+
+    def can_win(codec: str, ceiling: int) -> bool:
+        # utf-8 is the first key, so max() gives it every tie: a
+        # recognizer whose score ceiling is at most u cannot win, unless
+        # it is the declared charset, whose score the hint bonus lifts
+        return u < ceiling or codec == declared
+
+    if can_win("utf-16-le", 80) or can_win("utf-16-be", 80):
+        # both come from one pass; a stored score that cannot win is
+        # harmless
+        scores["utf-16-le"], scores["utf-16-be"] = _score_utf16(buf)
+    if can_win("cp500", 85):
+        scores["cp500"] = _score_cp500(counts)
+    ebcdic = _score_ebcdic_script(buf, counts)
     scores.update(ebcdic)
     if ebcdic:
         # a trained EBCDIC-script hit behind the structural gate
@@ -497,21 +529,21 @@ def detect_statistical(data: bytes, declared: str | None = None) -> str:
         return max(ebcdic.items(), key=lambda kv: kv[1])[0]
     if has_high:
         # single-byte Cyrillic heuristics
-        scores["cp866"] = _score_sbcs_cyrillic(buf,
-                                               [(0x80, 0xAF), (0xE0, 0xF1)])
-        scores["koi8-r"] = _score_sbcs_cyrillic(buf, [(0xC0, 0xFF)])
-    if has_high and scores["utf-8"] < 60:  # CJK/sbcs only when not UTF-8
+        if can_win("cp866", 60):
+            scores["cp866"] = _score_sbcs_cyrillic(
+                counts, [(0x80, 0xAF), (0xE0, 0xF1)])
+        if can_win("koi8-r", 60):
+            scores["koi8-r"] = _score_sbcs_cyrillic(counts, [(0xC0, 0xFF)])
+    if has_high and u < 60:  # CJK/sbcs only when not UTF-8
         for codec, prior, gate, ranges, distinctive in _MBCS_CANDIDATES:
             scores[codec] = _score_mbcs(raw, codec, prior, gate, ranges,
                                         distinctive)
         rel = _sbcs_rel_bigrams(buf)
         if rel is not None:
-            for codec, grams in _sbcs_models():
-                scores[codec] = _score_sbcs_ngram(rel, grams)
+            scores.update(_ngram_scores(rel, _sbcs_models()))
         scores["windows-1252"] = max(scores.get("windows-1252", 0),
-                                     _score_cp1252_punct(buf))
+                                     _score_cp1252_punct(counts))
 
-    declared = clean_charset(declared)
     if declared:
         # declared-hint bonus (CharsetDetector.java:207-210)
         base = scores.get(declared, 0)

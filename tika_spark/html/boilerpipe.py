@@ -23,6 +23,11 @@ see its docstring.
 
 The text-main output mirrors BoilerpipeContentHandler's emission: one
 paragraph per content block, newline-terminated.
+
+Like the reference's ``-T`` mode, which tees one SAX stream into
+BoilerpipeContentHandler and LinkContentHandler, the segmenter walk also
+feeds a ``layout.LinkCollector``: text-main and text-main-justext walk
+each body once, and their links equal text mode's.
 """
 
 from __future__ import annotations
@@ -30,6 +35,7 @@ from __future__ import annotations
 import re
 
 from tika_spark.html.dom import El
+from tika_spark.html.layout import LINK_TAGS, LinkCollector
 from tika_spark.html.mapper import DISCARD_ELEMENTS
 
 # tags that delimit text blocks (block-level vocabulary; inline tags
@@ -40,12 +46,27 @@ BLOCK_TAGS = frozenset(
     "section aside nav header footer figure figcaption frameset frame "
     "title option select".split())
 
-_WS_RE = re.compile(r"\s+")
-# "token contains an alphanumeric" — compiled form of
-# any(c.isalnum() for c in t) (equivalence spot-checked over the
-# fixture corpus; 2.5x faster on the word-count hot path)
-_ALNUM_RE = re.compile(r"[^\W_]")
+# a word is a token containing an alphanumeric (boilerpipe's
+# UnicodeTokenizer word/non-word distinction): this matches a non-word
+# token of a space-joined token run, with the space before it
+# ([^\w ]|_ is every non-space char str.isalnum() rejects)
+_NON_WORD_RE = re.compile(r" (?:[^\w ]|_)++(?![^ ])")
 _MAX_LINE = 80
+# one wrapped line of a space-joined word run: the longest prefix of
+# whole words at most _MAX_LINE chars long, or a single longer word
+_LINE_RE = re.compile(r"[^ ].{0,%d}(?= |\Z)|[^ ]+" % (_MAX_LINE - 1),
+                      re.S)
+
+
+def _words(text: str) -> tuple[int, str]:
+    """(word count, the words joined by single spaces) of ``text``, a
+    non-empty token run joined by single spaces: regex passes instead of
+    a test per token."""
+    spaced = " " + text
+    non_words = len(_NON_WORD_RE.findall(spaced))
+    if not non_words:
+        return text.count(" ") + 1, text
+    return text.count(" ") + 1 - non_words, _NON_WORD_RE.sub("", spaced)[1:]
 
 
 class TextBlock:
@@ -54,7 +75,9 @@ class TextBlock:
                  "is_content", "tag")
 
     def __init__(self, text, num_words, anchor_words, offset, tag="",
-                 tokens=None, tokens_are_words=False):
+                 words=None):
+        """``words``: the block's word tokens joined by single spaces
+        (the segmenter has it at hand); None derives it from ``text``."""
         # text kept as a piece list so merge_next is O(1): a giant page
         # fusing hundreds of equal-density blocks must not go quadratic
         # on string concatenation (measured 3 s/2000 docs before)
@@ -65,12 +88,10 @@ class TextBlock:
         self.offset_end = offset
         self.tag = tag
         self.is_content = False
-        # callers that already tokenized pass the list in — the wrap
-        # computation must not re-split (the segmenter hot path)
-        if tokens is None:
-            tokens = self.pieces[0].split()
-            tokens_are_words = False
-        self._compute_wrap(tokens, tokens_are_words)
+        if words is None:
+            words = " ".join(text.split())
+            words = _words(words)[1] if words else ""
+        self._compute_wrap(words)
 
     @property
     def text(self) -> str:
@@ -78,31 +99,18 @@ class TextBlock:
             self.pieces = ["\n".join(self.pieces)]
         return self.pieces[0]
 
-    def _compute_wrap(self, words, filtered: bool = False):
-        line_len = -1
-        lines = 0
-        words_cur_line = 0
-        search = _ALNUM_RE.search
-        for w in words:
-            # only WORD tokens advance the counters (the published
-            # flushBlock skips non-word tokens) — counting separators
-            # here would let num_words - words_cur_line go negative.
-            # callers that already filtered (the segmenter hot path)
-            # skip the per-token regex entirely
-            if not filtered and not search(w):
-                continue
-            words_cur_line += 1
-            line_len += len(w) + 1
-            if line_len > _MAX_LINE:
-                lines += 1
-                line_len = len(w)
-                words_cur_line = 1
-        if lines == 0:
+    def _compute_wrap(self, words: str):
+        """Wrap the words greedily at _MAX_LINE columns. Only word
+        tokens count (the published flushBlock skips non-word tokens),
+        and a first word longer than a line counts a line break before
+        it, as the published per-word loop does."""
+        if len(words) <= _MAX_LINE:   # one line
             self.wrapped_words = self.num_words
             self.wrapped_lines = 1
-        else:
-            self.wrapped_words = self.num_words - words_cur_line
-            self.wrapped_lines = lines
+            return
+        lines = _LINE_RE.findall(words)
+        self.wrapped_lines = len(lines) - 1 + (len(lines[0]) > _MAX_LINE)
+        self.wrapped_words = self.num_words - lines[-1].count(" ") - 1
 
     @property
     def text_density(self) -> float:
@@ -123,11 +131,13 @@ class TextBlock:
 
 
 class _Segmenter:
-    """DOM walk -> list of TextBlock (BoilerpipeHTMLContentHandler analog)."""
+    """DOM walk -> list of TextBlock (BoilerpipeHTMLContentHandler
+    analog); the same walk feeds the page's links to ``links``."""
 
-    def __init__(self):
+    def __init__(self, links: LinkCollector):
         self.blocks: list[TextBlock] = []
         self.offset = 0
+        self.links = links
         self._pieces: list[str] = []
         self._anchor_depth = 0
         self._anchor_pieces: list[str] = []
@@ -136,36 +146,29 @@ class _Segmenter:
     def _flush(self):
         if not self._pieces:
             return  # nothing buffered (consecutive block tags) — skip
-        #           the regex/join work entirely; ~half of all flushes
+        #           the split/join work entirely; ~half of all flushes
         # str.split() splits/strips on the same Unicode whitespace set
-        # re's \s matches, so one split replaces sub+strip+re-split —
-        # no regex in the hot path
-        tokens = "".join(self._pieces).split()
+        # re's \s matches, so one split replaces sub+strip+re-split
+        text = " ".join("".join(self._pieces).split())
         self._pieces.clear()
-        if not tokens:
-            self._anchor_pieces.clear()
-            return
-        text = " ".join(tokens)
-        # a "word" is a token containing an alphanumeric (boilerpipe's
-        # UnicodeTokenizer word/non-word distinction); filter() keeps
-        # the count loop in C
-        search = _ALNUM_RE.search
-        word_tokens = list(filter(search, tokens))
-        num_words = len(word_tokens)
+        num_words, words = _words(text) if text else (0, "")
         if num_words == 0:
-            # tokens but no words (separators, bullets): consumes an
-            # offset slot without storing a block -> creates the gaps
-            # that keep unrelated regions from proximity-fusing
             self._anchor_pieces.clear()
-            self.offset += 1
+            if text:
+                # tokens but no words (separators, bullets): consumes
+                # an offset slot without storing a block -> creates the
+                # gaps that keep unrelated regions from proximity-fusing
+                self.offset += 1
             return
-        atoks = "".join(self._anchor_pieces).split()
-        self._anchor_pieces.clear()
-        anchor_words = len(list(filter(search, atoks))) if atoks else 0
-        blk = TextBlock(text, num_words, min(anchor_words, num_words),
-                        self.offset, self._block_tag,
-                        tokens=word_tokens, tokens_are_words=True)
-        self.blocks.append(blk)
+        anchor_words = 0
+        if self._anchor_pieces:
+            anchor_text = " ".join("".join(self._anchor_pieces).split())
+            self._anchor_pieces.clear()
+            if anchor_text:
+                anchor_words = _words(anchor_text)[0]
+        self.blocks.append(TextBlock(text, num_words,
+                                     min(anchor_words, num_words),
+                                     self.offset, self._block_tag, words))
         self.offset += 1
 
     def walk(self, node):
@@ -173,6 +176,7 @@ class _Segmenter:
             self._pieces.append(node)
             if self._anchor_depth:
                 self._anchor_pieces.append(node)
+            self.links.text(node)
             return
         tag = node.tag
         if tag in DISCARD_ELEMENTS:
@@ -181,21 +185,27 @@ class _Segmenter:
         if is_block:
             self._flush()
             self._block_tag = tag
-        if tag == "a":
+        # every <a> counts anchor words; only one with an href is a link
+        is_anchor = tag == "a"
+        if is_anchor:
             self._anchor_depth += 1
-        if tag == "img":
-            pass  # images contribute no words but keep block continuity
+        opened = tag in LINK_TAGS and self.links.enter(node)
         for child in node.children:
             self.walk(child)
-        if tag == "a":
+        if opened:
+            self.links.leave()
+        if is_anchor:
             self._anchor_depth -= 1
             self._anchor_pieces.append(" ")  # word boundary between anchors
         if is_block:
             self._flush()
 
 
-def segment_blocks(body: El) -> list[TextBlock]:
-    seg = _Segmenter()
+def segment_blocks(body: El,
+                   links: LinkCollector | None = None) -> list[TextBlock]:
+    """Text blocks of a body DOM; ``links``, when given, collects the
+    page's links in the same walk."""
+    seg = _Segmenter(links or LinkCollector(None))
     for child in body.children:
         seg.walk(child)
     seg._flush()
@@ -283,7 +293,8 @@ def num_words_rules_classify(blocks: list[TextBlock]) -> None:
             curr.is_content = False
 
 
-def classify_blocks(body: El) -> list[TextBlock]:
+def classify_blocks(body: El, links: LinkCollector | None = None
+                    ) -> list[TextBlock]:
     """Default pipeline over a body DOM: segment → SimpleBlockFusion →
     NumWordsRulesClassifier.
 
@@ -297,19 +308,22 @@ def classify_blocks(body: El) -> list[TextBlock]:
     DefaultExtractor shape can compose ``block_proximity_fusion`` /
     ``density_rules_classify`` themselves.
     """
-    blocks = segment_blocks(body)
+    blocks = segment_blocks(body, links)
     blocks = simple_block_fusion(blocks)
     num_words_rules_classify(blocks)
     return blocks
 
 
-def main_content(body: El) -> tuple[str, list]:
+def main_content(body: El, links: LinkCollector | None = None
+                 ) -> tuple[str, list]:
     """text-main projection: one paragraph per content block + spans.
 
     Mirrors BoilerpipeContentHandler's re-emission (one <p> per content
     block -> block text + '\\n' through the layout contract).
+    ``links``, when given, collects the page's links in the segmenter
+    walk.
     """
-    blocks = classify_blocks(body)
+    blocks = classify_blocks(body, links)
     pieces: list[str] = []
     spans: list[tuple[int, int, str]] = []
     pos = 0

@@ -3,11 +3,12 @@
 Orchestrates the chain (reference lifecycle: SURVEY.md §3.2):
 charset cascade (HtmlParser.java:81-165) -> lenient DOM (dom.py) ->
 head handling: title / <meta name|http-equiv> / ICBM lat-long /
-<base href> -> CONTENT_LOCATION (HtmlHandler.java:100-164) -> body
-serialization with the XHTML whitespace skeleton (layout.py) ->
-optional Boilerpipe main-content classification (boilerpipe.py) ->
-output guards (SecureContentHandler ratio / WriteOutContentHandler
-char limit).
+<base href> -> CONTENT_LOCATION (HtmlHandler.java:100-164) -> the body
+walk, which also collects the links: the XHTML-skeleton serializer
+(layout.py) in text mode, the Boilerpipe segmenter (boilerpipe.py) in
+text-main and text-main-justext. The readability, xhtml and markdown
+modes serialize for the links and walk again for their own output.
+The output guards run later, at the batch dispatch (pipeline/stages.py).
 """
 
 from __future__ import annotations
@@ -18,7 +19,8 @@ from tika_spark import charset as cs
 from tika_spark.config import ExtractConfig
 from tika_spark.html import boilerpipe as bp
 from tika_spark.html.dom import El, build_dom, normalize_tree
-from tika_spark.html.layout import resolve_url, safe_chars, serialize_body
+from tika_spark.html.layout import (LinkCollector, resolve_url, safe_chars,
+                                    serialize_body)
 
 _ICBM_RE = re.compile(r"\s*(-?\d+\.\d+)[,\s]+(-?\d+\.\d+)\s*")
 
@@ -83,21 +85,21 @@ def extract_html(data: bytes, url: str | None = None,
     metadata: dict[str, list[str]] = {"Content-Encoding": [charset]}
     base = _process_head(head, url, metadata)
 
-    if config.mode in ("text-main", "text-main-justext",
-                       "text-main-readability"):
-        # the full-body serialization's text/spans are discarded here;
-        # it runs only for its links side-product (the dominant per-doc
-        # cost after the parse)
-        _, _, links = serialize_body(body, base)
+    if config.mode in ("text-main", "text-main-justext"):
+        # the Boilerpipe segmenter walk collects the links: the body is
+        # walked once
+        collector = LinkCollector(base)
         if config.mode == "text-main-justext":
             from tika_spark.html.justext import main_content_justext
-            text, spans = main_content_justext(body)
-        elif config.mode == "text-main-readability":
-            from tika_spark.html.readability import (
-                main_content_readability)
-            text, spans = main_content_readability(body)
+            text, spans = main_content_justext(body, links=collector)
         else:
-            text, spans = bp.main_content(body)
+            text, spans = bp.main_content(body, collector)
+        text = safe_chars(text)
+        links = collector.links
+    elif config.mode == "text-main-readability":
+        from tika_spark.html.readability import main_content_readability
+        _, _, links = serialize_body(body, base)
+        text, spans = main_content_readability(body)
         text = safe_chars(text)
     elif config.mode == "xhtml":
         from tika_spark.html.layout import serialize_xhtml

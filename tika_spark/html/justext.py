@@ -125,12 +125,14 @@ def classify_blocks_justext(blocks: list[TextBlock],
     return revise_classification(cf)
 
 
-def main_content_justext(body, stoplist: frozenset = STOPLIST_EN
-                         ) -> tuple[str, list]:
+def main_content_justext(body, stoplist: frozenset = STOPLIST_EN,
+                         links=None) -> tuple[str, list]:
     """(text, spans) of the good paragraphs — the jusText analog of
     boilerpipe.main_content: one newline-terminated paragraph per
-    kept block, spans = (start, end, n_words) in the output text."""
-    blocks = segment_blocks(body)
+    kept block, spans = (start, end, n_words) in the output text.
+    ``links`` (a layout.LinkCollector) collects the page's links in the
+    segmenter walk."""
+    blocks = segment_blocks(body, links)
     classes = classify_blocks_justext(blocks, stoplist)
     parts = []
     spans = []

@@ -14,9 +14,13 @@ This is the load-bearing whitespace contract for byte-identical text
 - invalid-XML characters are replaced with U+FFFD
   (SafeContentHandler.java:114-141).
 
-The single walk also collects links (LinkContentHandler semantics:
-<a href> with nested anchor text incl. img alt, <img src> with alt)
-and per-block spans (start, end, tag) into the emitted text.
+The same walk records per-block spans (start, end, tag) into the
+emitted text and drives a ``LinkCollector``, which holds the link rules
+(LinkContentHandler semantics: <a href> with nested anchor text incl.
+img alt, <img src> with alt). Which walk collects the links depends on
+the mode: this serializer in text, xhtml, markdown and
+text-main-readability; the Boilerpipe segmenter (boilerpipe.py) in
+text-main and text-main-justext, which never serialize the body.
 """
 
 from __future__ import annotations
@@ -80,30 +84,82 @@ class Link:
         self.title, self.text, self.rel = title, text, rel
 
 
-class _Serializer:
+# source tags the link rules act on: those the safe-element mapping
+# sends to ``a`` or ``img``
+LINK_TAGS = frozenset(tag for tag, mapped in mapper.SAFE_ELEMENTS.items()
+                      if mapped in ("a", "img"))
+
+
+class LinkCollector:
+    """The link rules (LinkContentHandler semantics), driven by a body
+    walk: the walk calls :meth:`text` for every text node, and
+    :meth:`enter` / :meth:`leave` around every element whose tag is in
+    ``LINK_TAGS``.
+
+    - a link is an ``a`` whose safe attributes include ``href``;
+    - text inside an anchor goes to the innermost open one, and a
+      nested anchor passes its text up to the enclosing anchor;
+    - an ``img`` alt goes into the enclosing anchor's text, and an
+      ``img`` with a ``src`` is a link of its own;
+    - URLs resolve against the base (``<base href>`` or the page URL);
+    - links come out in close order: an anchor after the links
+      nested in it.
+    """
+
     def __init__(self, base_url: str | None):
         self.base = base_url
+        self.links: list[Link] = []
+        self._open: list[tuple] = []   # (href, title, rel, text pieces)
+
+    def text(self, s: str):
+        if self._open:
+            self._open[-1][3].append(s)
+
+    def enter(self, node: El) -> bool:
+        """True when ``node`` opened an anchor: call :meth:`leave`
+        after its children."""
+        mapped = mapper.map_safe_element(node.tag)
+        attrs = mapper.safe_attrs(mapped, node.attrs)
+        if mapped == "a":
+            if "href" not in attrs:
+                return False
+            self._open.append((resolve_url(self.base, attrs["href"]),
+                               node.attrs.get("title", ""),
+                               attrs.get("rel", ""), []))
+            return True
+        alt = node.attrs.get("alt", "")  # img always gains alt=""
+        if alt:
+            self.text(alt)
+        src = attrs.get("src")
+        if src:
+            self.links.append(Link("img", resolve_url(self.base, src),
+                                   node.attrs.get("title", ""), alt))
+        return False
+
+    def leave(self):
+        href, title, rel, pieces = self._open.pop()
+        txt = "".join(pieces)
+        self.text(txt)
+        self.links.append(Link("a", href, title, txt, rel))
+
+
+class _Serializer:
+    def __init__(self, base_url: str | None):
         self.pieces: list[str] = []
         self.pos = 0
         self.spans: list[tuple[int, int, str]] = []
-        self.links: list[Link] = []
-        self._anchor_stack: list[dict] = []
-
-    def _emit(self, s: str):
-        if s:
-            self.pieces.append(s)
-            self.pos += len(s)
-            if self._anchor_stack:
-                self._anchor_stack[-1]["text"].append(s)
+        self.links = LinkCollector(base_url)
 
     def _emit_layout(self, s: str):
-        # layout whitespace outside anchors' text accumulation
+        # layout whitespace: not part of any anchor's text
         self.pieces.append(s)
         self.pos += len(s)
 
     def walk(self, node):
         if isinstance(node, str):
-            self._emit(node)
+            self.pieces.append(node)
+            self.pos += len(node)
+            self.links.text(node)
             return
         tag = node.tag
         if tag in mapper.DISCARD_ELEMENTS:
@@ -119,34 +175,11 @@ class _Serializer:
         span_start = self.pos
         if mapped in INDENT:
             self._emit_layout("\t")
-
-        attrs = mapper.safe_attrs(mapped, node.attrs)
-        if mapped == "a" and "href" in attrs:
-            self._anchor_stack.append({
-                "href": resolve_url(self.base, attrs.get("href", "")),
-                "title": node.attrs.get("title", ""),
-                "rel": attrs.get("rel", ""),
-                "text": [],
-            })
-            for child in node.children:
-                self.walk(child)
-            a = self._anchor_stack.pop()
-            txt = "".join(a["text"])
-            if self._anchor_stack:       # nested anchors: propagate text
-                self._anchor_stack[-1]["text"].append(txt)
-            self.links.append(Link("a", a["href"], a["title"], txt, a["rel"]))
-        elif mapped == "img":
-            src = attrs.get("src")
-            alt = node.attrs.get("alt", "")  # img always gains alt=""
-            if self._anchor_stack and alt:
-                self._anchor_stack[-1]["text"].append(alt)
-            if src:
-                self.links.append(
-                    Link("img", resolve_url(self.base, src),
-                         node.attrs.get("title", ""), alt))
-        else:
-            for child in node.children:
-                self.walk(child)
+        opened = tag in LINK_TAGS and self.links.enter(node)
+        for child in node.children:
+            self.walk(child)
+        if opened:
+            self.links.leave()
 
         if mapped in ENDLINE:
             self._emit_layout("\n")
@@ -243,4 +276,4 @@ def serialize_body(body: El, base_url: str | None = None):
     for child in body.children:
         ser.walk(child)
     text = safe_chars("".join(ser.pieces))
-    return text, ser.spans, ser.links
+    return text, ser.spans, ser.links.links

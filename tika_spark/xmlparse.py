@@ -14,15 +14,17 @@ Reimplements the semantics of the reference's XML chain:
   text are stripped. Output shape through the XHTML layout contract:
   title\\n description\\n then '\\t{entry}\\n{desc}\\n' per entry + '\\n'.
 
-Parsing uses stdlib ElementTree with resolve_entities disabled by
-construction (no DTD processing at all); malformed XML -> status row,
-never an exception (the fleet must not fail — SURVEY.md §2 H1).
+Parsing uses stdlib ElementTree; a document whose DTD declares any
+entity is refused before parsing (XXE / billion laughs), so no declared
+entity is ever expanded; malformed XML -> status row, never an exception (the
+fleet must not fail — SURVEY.md §2 H1).
 """
 
 from __future__ import annotations
 
 import re
 import xml.etree.ElementTree as ET
+from xml.parsers import expat
 
 from tika_spark import charset as cs
 from tika_spark.config import ExtractConfig
@@ -35,7 +37,6 @@ _DC_KEYS = frozenset(
     "title creator subject description publisher contributor date type "
     "format identifier language rights".split())
 _TAG_STRIP_RE = re.compile(r"<[^>]*>")
-_ENTITY_RE = re.compile(rb"<!ENTITY", re.IGNORECASE)
 
 
 def _local(tag: str) -> tuple[str, str]:
@@ -46,8 +47,35 @@ def _local(tag: str) -> tuple[str, str]:
     return "", tag
 
 
+class _PrologEnd(Exception):
+    """Stops the prolog scan; ``args[0]`` says whether the DTD declared
+    an entity."""
+
+
+def _declares_entity(data: bytes) -> bool:
+    """True when the document's DTD declares an entity. Expat reads
+    only the prolog: the scan stops at the first entity declaration or
+    at the root element's start tag, whichever comes first."""
+
+    def stop(declared):
+        def handler(*_):
+            raise _PrologEnd(declared)
+        return handler
+
+    parser = expat.ParserCreate()
+    parser.EntityDeclHandler = stop(True)
+    parser.StartElementHandler = stop(False)
+    try:
+        parser.Parse(data, True)
+    except _PrologEnd as end:
+        return end.args[0]
+    except expat.ExpatError:
+        pass  # malformed: ET.fromstring reports it
+    return False
+
+
 def _parse_bytes(data: bytes) -> ET.Element | None:
-    if _ENTITY_RE.search(data[:4096]):
+    if _declares_entity(data):
         return None  # refuse DTD entity declarations (XXE/billion-laughs)
     try:
         return ET.fromstring(data)
